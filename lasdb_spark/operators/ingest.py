@@ -11,10 +11,13 @@ Spark-first re-expression of the reference's single-threaded ingest
   single distributed Parquet write, range-partitioned and sorted by
   ``sfc_key`` so row-group min/max stats give B-tree-like range pruning.
 
-Scale notes (100 TB): ``repartitionByRange(sfc_key)`` is one shuffle and
-yields globally range-ordered files → a bbox query touches only the few
-files/row-groups whose key range intersects the window. Partition count
-should be sized so each file is 128–512 MB at the target scale.
+Scale notes (100 TB): the range partitioning on the layout's key
+(``sfc_key`` flat, ``sfc_head`` block) is one shuffle and yields
+globally range-ordered files → a bbox query touches only the few
+files/row-groups whose key range intersects the window. Ingest and
+compaction share one partition-count rule: a ``target_partitions`` hint
+is capped at one partition per 300 000 points (at least 2); without a
+hint, one partition per 500 000 points, at most 256.
 """
 
 from __future__ import annotations
@@ -73,15 +76,7 @@ def compute_metadata(
 ) -> DatasetMeta:
     """One distributed agg for count + bbox union (reference S4/G5,
     pipeline/import_data.py:76-99) + the split-length rule (F8)."""
-    row = points.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("x").alias("x0"),
-        F.max("x").alias("x1"),
-        F.min("y").alias("y0"),
-        F.max("y").alias("y1"),
-        F.min("z").alias("z0"),
-        F.max("z").alias("z1"),
-    ).collect()[0]
+    row = _extent(points)
     # Planning maxima MUST use the same HALF_UP rule as the executor
     # quantization (quantize_col / F.round): Python round() is banker's
     # rounding, and a .5 max landing one cell low can shrink grid_bits
@@ -105,6 +100,19 @@ def compute_metadata(
         offsets=list(offsets),
         bbox=[row.x0, row.x1, row.y0, row.y1, row.z0, row.z1],
     )
+
+
+def _extent(points: DataFrame):
+    """Row(n, x0, x1, y0, y1, z0, z1): count + bbox in one aggregation."""
+    return points.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.min("x").alias("x0"),
+        F.max("x").alias("x1"),
+        F.min("y").alias("y0"),
+        F.max("y").alias("y1"),
+        F.min("z").alias("z0"),
+        F.max("z").alias("z1"),
+    ).collect()[0]
 
 
 def attach_sfc(points: DataFrame, meta: DatasetMeta) -> DataFrame:
@@ -183,6 +191,48 @@ def unpack_blocks(blocks: DataFrame, meta: DatasetMeta) -> DataFrame:
     )
 
 
+def stored_points(df: DataFrame, meta: DatasetMeta, layout: str) -> DataFrame:
+    """The stored table as (x, y, z, sfc_key) point rows, whatever the
+    layout — the one place a block store is decoded for point work."""
+    return unpack_blocks(df, meta) if layout == "block" else df
+
+
+def _key_column(layout: str) -> str:
+    """The column a stored layout is range-partitioned and sorted by."""
+    if layout == "flat":
+        return "sfc_key"
+    if layout == "block":
+        return "sfc_head"
+    raise ValueError(f"unknown layout {layout!r}")
+
+
+def _partition_count(n_points: int, target_partitions: int | None) -> int:
+    """Output file count for a sorted write of ``n_points`` rows.
+
+    The caller's value is a parallelism HINT capped by the data size
+    (guide §2.2/§6): a core-count hint must not slice a small table
+    into near-empty range partitions — every written file costs a task
+    at write time and a footer+task at EVERY downstream query, which is
+    pure scheduling overhead at bench scale and the many-small-files
+    anti-pattern at any scale. At production row counts the data cap
+    exceeds any sane hint, so the hint wins and sizes the shuffle to
+    the cluster."""
+    if target_partitions:
+        data_cap = max(2, n_points // 300_000 + 1)
+        return max(1, min(target_partitions, data_cap))
+    return max(1, min(256, n_points // 500_000 + 1))
+
+
+def _sorted_by_key(
+    df: DataFrame, layout: str, n_points: int, target_partitions: int | None
+) -> DataFrame:
+    """Range-partition and sort by the layout's key: globally
+    key-ordered files whose row-group stats prune window queries."""
+    key = _key_column(layout)
+    n = _partition_count(n_points, target_partitions)
+    return df.repartitionByRange(n, key).sortWithinPartitions(key)
+
+
 def block_histogram(df_sfc: DataFrame) -> DataFrame:
     """(sfc_head, num_tail) per block (G4; point_processor.py:74-79)."""
     return df_sfc.groupBy("sfc_head").agg(F.count(F.lit(1)).alias("num_tail"))
@@ -222,34 +272,9 @@ def ingest_points(
     land under ``base_path`` so the planner works identically."""
     meta = compute_metadata(points, name, srid, scales, offsets, ratio)
     df = attach_sfc(points, meta)
-    out = os.path.join(base_path, f"pc_record_{name}")
-    if target_partitions:
-        # Treat the caller's value as a parallelism HINT capped by the
-        # data size (guide §2.2/§6): a core-count hint must not slice a
-        # small table into near-empty range partitions — every written
-        # file costs a task at write time and a footer+task at EVERY
-        # downstream query, which is pure scheduling overhead at bench
-        # scale and the many-small-files anti-pattern at any scale. At
-        # production row counts the data cap exceeds any sane hint, so
-        # the hint wins and sizes the shuffle to the cluster.
-        data_cap = max(2, meta.point_count // 300_000 + 1)
-        nparts = max(1, min(target_partitions, data_cap))
-    else:
-        nparts = max(1, min(256, meta.point_count // 500_000 + 1))
-    if layout == "flat":
-        sorted_df = (
-            df.select("x", "y", "z", "sfc_key")
-            .repartitionByRange(nparts, "sfc_key")
-            .sortWithinPartitions("sfc_key")
-        )
-    elif layout == "block":
-        sorted_df = (
-            pack_blocks(df)
-            .repartitionByRange(nparts, "sfc_head")
-            .sortWithinPartitions("sfc_head")
-        )
-    else:
-        raise ValueError(f"unknown layout {layout!r}")
+    out = record_path(base_path, name)
+    rows = df.select("x", "y", "z", "sfc_key") if layout == "flat" else pack_blocks(df)
+    sorted_df = _sorted_by_key(rows, layout, meta.point_count, target_partitions)
     if sink == "jdbc":
         if not jdbc_url:
             raise ValueError("sink='jdbc' requires jdbc_url")
@@ -311,7 +336,7 @@ def compact_dataset(
     name: str,
     target_partitions: int | None = None,
 ) -> None:
-    """Re-establish the global sfc_key range order after streaming or
+    """Re-establish the global key range order after streaming or
     incremental appends (the maintenance half of continuous ingest:
     appended micro-batch files are each key-sorted but overlap, so
     row-group pruning degrades until a compaction pass).
@@ -323,24 +348,12 @@ def compact_dataset(
 
     path = record_path(base_path, name)
     df = spark.read.parquet(path)
-    if target_partitions:
-        # same data-size cap as ingest_points: the count on a bare
-        # parquet scan is footer-stats-only (no column reads), so the
-        # sizing job costs milliseconds, and a core-count hint cannot
-        # shatter a small store into near-empty files
-        data_cap = max(2, df.count() // 300_000 + 1)
-        nparts = max(1, min(target_partitions, data_cap))
-    else:
-        # size from the file listing, NOT df.rdd.getNumPartitions() —
-        # the RDD conversion re-plans the whole scan just to read a count
-        nparts = max(1, len(df.inputFiles()) // 4)
+    layout = _stored_layout(base_path, name)
+    # the count on a bare parquet scan is footer-stats-only (no column
+    # reads), so sizing by ingest_points' rule costs milliseconds
+    sorted_df = _sorted_by_key(df, layout, df.count(), target_partitions)
     tmp = path + "_compacting"
-    (
-        df.repartitionByRange(nparts, "sfc_key")
-        .sortWithinPartitions("sfc_key")
-        .write.mode("overwrite")
-        .parquet(tmp)
-    )
+    sorted_df.write.mode("overwrite").parquet(tmp)
     old = path + "_old"
     os.rename(path, old)
     os.rename(tmp, path)
@@ -372,16 +385,7 @@ def refresh_metadata(
     stores full keys so only the derived grid width matters)."""
     meta, layout = load_metadata(base_path, name)
     df = spark.read.parquet(record_path(base_path, name))
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    row = pts.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min("x").alias("x0"),
-        F.max("x").alias("x1"),
-        F.min("y").alias("y0"),
-        F.max("y").alias("y1"),
-        F.min("z").alias("z0"),
-        F.max("z").alias("z1"),
-    ).collect()[0]
+    row = _extent(stored_points(df, meta, layout))
     meta.point_count = row.n
     meta.bbox = [row.x0, row.x1, row.y0, row.y1, row.z0, row.z1]
     from ..pcsfc.morton import encode_morton_2d
@@ -404,9 +408,18 @@ def load_metadata(base_path: str, name: str) -> tuple[DatasetMeta, str]:
     return DatasetMeta(**d), layout
 
 
+def _stored_layout(base_path: str, name: str) -> str:
+    """Layout recorded in the metadata row; a bare key-sorted table
+    without one is flat."""
+    try:
+        return load_metadata(base_path, name)[1]
+    except FileNotFoundError:
+        return "flat"
+
+
 def load_dataset(spark: SparkSession, base_path: str, name: str) -> tuple[DataFrame, DatasetMeta, str]:
     meta, layout = load_metadata(base_path, name)
-    df = spark.read.parquet(os.path.join(base_path, f"pc_record_{name}"))
+    df = spark.read.parquet(record_path(base_path, name))
     return df, meta, layout
 
 
@@ -421,11 +434,11 @@ def layout_report(
 
     returns {n_files, n_small_files, total_bytes, overlap_files,
     overlap_fraction, clustered} where ``overlap_files`` counts files
-    whose sfc_key range intersects any earlier file's (in lo-sorted
-    order — a globally range-sorted layout has zero; every overlap
-    forces row-group pruning to read multiple files for keys in the
-    intersection) and ``clustered`` is the publishable verdict (no
-    overlaps AND no small files).
+    whose key range (``sfc_key`` flat, ``sfc_head`` block) intersects
+    any earlier file's (in lo-sorted order — a globally range-sorted
+    layout has zero; every overlap forces row-group pruning to read
+    multiple files for keys in the intersection) and ``clustered`` is
+    the publishable verdict (no overlaps AND no small files).
 
     Scale: per-file key ranges come from ONE distributed groupBy on
     input_file_name() (a metadata column — no extra scan state); the
@@ -435,11 +448,12 @@ def layout_report(
     sizes come from the directory listing, not from reading data."""
     path = record_path(base_path, name)
     df = spark.read.parquet(path)
+    key = _key_column(_stored_layout(base_path, name))
     ranges = (
         df.groupBy(F.input_file_name().alias("f"))
         .agg(
-            F.min("sfc_key").alias("lo"),
-            F.max("sfc_key").alias("hi"),
+            F.min(key).alias("lo"),
+            F.max(key).alias("hi"),
             F.count(F.lit(1)).alias("n_rows"),
         )
         .collect()

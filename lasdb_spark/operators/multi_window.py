@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 
 from ..pcsfc.morton import encode_morton_2d
 from ..pcsfc.range_search import planning_grid_bounds
-from .ingest import DatasetMeta, unpack_blocks
+from .ingest import DatasetMeta, stored_points
 
 #: max total covering cells across all windows — bounds the broadcast
 #: table (a few MB) and the per-point join fan-out
@@ -85,6 +85,24 @@ def plan_window_cells(
     return shift, rows
 
 
+def _cell_join(
+    df: DataFrame, meta: DatasetMeta, layout: str, shift: int, rows, cells: DataFrame
+) -> DataFrame:
+    """Stored points joined to the broadcast ``cells`` table on their
+    level-``shift`` Morton cell (``rows`` = the planned
+    (id, cell, ...) rows behind ``cells``). A coarse global key range
+    over all planned cells is pushed to the Parquet scan so row groups
+    wholly outside every window are never read."""
+    lo = min(r[1] for r in rows) << (2 * shift)
+    hi = ((max(r[1] for r in rows) + 1) << (2 * shift)) - 1
+    return (
+        stored_points(df, meta, layout)
+        .filter(F.col("sfc_key").between(lo, hi))
+        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
+        .join(F.broadcast(cells), "cell")
+    )
+
+
 def multi_bbox_stats(
     df: DataFrame,
     meta: DatasetMeta,
@@ -107,19 +125,9 @@ def multi_bbox_stats(
         rows, "win_id long, cell long, wx0 double, wx1 double, "
         "wy0 double, wy1 double"
     )
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    # coarse global key range: pushed to the Parquet scan so row groups
-    # wholly outside the union of windows are never read
-    lo = min(r[1] for r in rows) << (2 * shift)
-    hi = ((max(r[1] for r in rows) + 1) << (2 * shift)) - 1
-    joined = (
-        pts.filter(F.col("sfc_key").between(lo, hi))
-        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
-        .join(F.broadcast(cdf), "cell")
-        .filter(
-            F.col("x").between(F.col("wx0"), F.col("wx1"))
-            & F.col("y").between(F.col("wy0"), F.col("wy1"))
-        )
+    joined = _cell_join(df, meta, layout, shift, rows, cdf).filter(
+        F.col("x").between(F.col("wx0"), F.col("wx1"))
+        & F.col("y").between(F.col("wy0"), F.col("wy1"))
     )
     return joined.groupBy("win_id").agg(
         F.count(F.lit(1)).alias("n_points"),
@@ -171,16 +179,11 @@ def point_knn_join(
         [(q, cell, centers[q][0], centers[q][1]) for q, cell, *_ in rows],
         "q_id long, cell long, qx double, qy double",
     )
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    lo = min(c for _, c, *_ in rows) << (2 * shift)
-    hi = ((max(c for _, c, *_ in rows) + 1) << (2 * shift)) - 1
     d2 = (F.col("x") - F.col("qx")) * (F.col("x") - F.col("qx")) + (
         F.col("y") - F.col("qy")
     ) * (F.col("y") - F.col("qy"))
     cand = (
-        pts.filter(F.col("sfc_key").between(lo, hi))
-        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
-        .join(F.broadcast(cdf), "cell")
+        _cell_join(df, meta, layout, shift, rows, cdf)
         .withColumn("d2", d2)
         .filter(F.col("d2") <= r * r)
     )
@@ -296,9 +299,6 @@ def zonal_stats(
     cdf = spark.createDataFrame(
         [(z, cell) for z, cell, *_ in rows], "zone_id long, cell long"
     )
-    pts = unpack_blocks(df, meta) if layout == "block" else df
-    lo = min(c for _, c, *_ in rows) << (2 * shift)
-    hi = ((max(c for _, c, *_ in rows) + 1) << (2 * shift)) - 1
     inside = None
     for z, rings in rings_by_zone.items():
         test = point_in_polygon_col(rings, F.col("x"), F.col("y"))
@@ -306,12 +306,7 @@ def zonal_stats(
         inside = cond if inside is None else inside.when(
             F.col("zone_id") == z, test
         )
-    joined = (
-        pts.filter(F.col("sfc_key").between(lo, hi))
-        .withColumn("cell", F.shiftright(F.col("sfc_key"), 2 * shift))
-        .join(F.broadcast(cdf), "cell")
-        .filter(inside)
-    )
+    joined = _cell_join(df, meta, layout, shift, rows, cdf).filter(inside)
     zq = F.round(F.col("z") * 100).cast("long")
     return (
         joined.select("zone_id", zq.alias("zq"))

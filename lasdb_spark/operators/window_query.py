@@ -35,6 +35,7 @@ from ..functions.geometry import (
     wkt_rings,
 )
 from ..pcsfc.range_search import (
+    _merge_ranges,
     apply_key_ranges,
     decompose_bbox,
     key_ranges_to_head_ranges,
@@ -62,13 +63,13 @@ def head_lookup(df: DataFrame, heads, meta: DatasetMeta, layout: str = "flat") -
     # per-head key range [h << t, (h+1) << t): pushable range predicates
     # on the SORTED key column, so row-group stats skip cold blocks —
     # an isin() on the derived (h = key >> t) column would not push.
-    pred = None
-    for h in heads:
-        term = F.col("sfc_key").between(h << t, ((h + 1) << t) - 1)
-        pred = term if pred is None else pred | term
-    if pred is None:
-        return df.filter(F.lit(False))
-    return df.filter(pred)
+    ranges = _merge_ranges(sorted((h << t, ((h + 1) << t) - 1) for h in heads))
+    return apply_key_ranges(df, "sfc_key", ranges)
+
+
+def _in_box(x0: float, x1: float, y0: float, y1: float):
+    """Exact bbox refine on the original coordinates."""
+    return F.col("x").between(x0, x1) & F.col("y").between(y0, y1)
 
 
 @dataclass
@@ -123,9 +124,7 @@ class WindowQuerier:
             if minz is not None and "z_max" in self.df.columns:
                 blocks = blocks.filter(F.col("z_max") >= float(minz))
             return unpack_blocks(blocks, self.meta)
-        if "sfc_key" in self.df.columns:
-            return apply_key_ranges(self.df, "sfc_key", ranges)
-        return self.df  # raw points: no index available, full scan + refine
+        return apply_key_ranges(self.df, "sfc_key", ranges)
 
     @staticmethod
     def _zslab(df: DataFrame, minz: float | None, maxz: float | None) -> DataFrame:
@@ -136,22 +135,25 @@ class WindowQuerier:
             df = df.filter(F.col("z") <= float(maxz))
         return df
 
+    def _window(self, box, minz, maxz, *refine) -> DataFrame:
+        """Prune to ``box`` = (x0, x1, y0, y1), apply the ``refine``
+        filters in order, then the z-slab; return the result columns."""
+        out = self._pruned(*box, minz, maxz)
+        for cond in refine:
+            out = out.filter(cond)
+        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+
     # -- query surface (Q6-Q11) -------------------------------------------
     def bbox(self, bbox, minz=None, maxz=None) -> DataFrame:
         """bbox = [x_min, x_max, y_min, y_max] (Q6)."""
-        x0, x1, y0, y1 = (float(v) for v in bbox)
-        out = self._pruned(x0, x1, y0, y1, minz, maxz).filter(
-            F.col("x").between(x0, x1) & F.col("y").between(y0, y1)
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        box = tuple(float(v) for v in bbox)
+        return self._window(box, minz, maxz, _in_box(*box))
 
     def circle(self, center, radius, minz=None, maxz=None) -> DataFrame:
         """center = [cx, cy] (Q7): circumscribing-bbox prune + exact."""
         cx, cy, r = float(center[0]), float(center[1]), float(radius)
-        out = self._pruned(cx - r, cx + r, cy - r, cy + r, minz, maxz).filter(
-            circle_predicate(F.col("x"), F.col("y"), cx, cy, r)
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        exact = circle_predicate(F.col("x"), F.col("y"), cx, cy, r)
+        return self._window((cx - r, cx + r, cy - r, cy + r), minz, maxz, exact)
 
     def polygon(self, wkt: str, minz=None, maxz=None) -> DataFrame:
         """WKT POLYGON with holes, or MULTIPOLYGON (Q8): bbox prune +
@@ -163,18 +165,13 @@ class WindowQuerier:
         for geometries up to MAX_NATIVE_EDGES edges; bigger ones fall
         back to the Arrow-batched pandas UDF."""
         rings = wkt_rings(wkt)
-        x0, x1, y0, y1 = rings_bbox(rings)
+        box = rings_bbox(rings)
         n_edges = sum(len(r) for r in rings)
         if n_edges <= MAX_NATIVE_EDGES:
             exact = point_in_polygon_col(rings, F.col("x"), F.col("y"))
         else:
             exact = point_in_polygon_udf(wkt)(F.col("x"), F.col("y"))
-        out = (
-            self._pruned(x0, x1, y0, y1, minz, maxz)
-            .filter(F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
-            .filter(exact)
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        return self._window(box, minz, maxz, _in_box(*box), exact)
 
     def polyline_buffer(self, wkt: str, dist: float, minz=None, maxz=None) -> DataFrame:
         """All points within ``dist`` of a WKT LINESTRING (the reference
@@ -183,13 +180,9 @@ class WindowQuerier:
         fully native: OR over per-segment clamped distance² terms)."""
         pts = parse_wkt_linestring(wkt)
         dist = float(dist)
-        x0, x1, y0, y1 = polyline_bbox(pts, dist)
-        out = (
-            self._pruned(x0, x1, y0, y1, minz, maxz)
-            .filter(F.col("x").between(x0, x1) & F.col("y").between(y0, y1))
-            .filter(polyline_buffer_col(pts, dist, F.col("x"), F.col("y")))
-        )
-        return self._zslab(out, minz, maxz).select(*RESULT_COLS)
+        box = polyline_bbox(pts, dist)
+        exact = polyline_buffer_col(pts, dist, F.col("x"), F.col("y"))
+        return self._window(box, minz, maxz, _in_box(*box), exact)
 
     def knn(self, point, k: int, minz=None, maxz=None) -> DataFrame:
         """k nearest neighbours of [px, py] (Q11 — declared but NOT
@@ -226,8 +219,7 @@ class WindowQuerier:
             if px - r <= x0 and px + r >= x1 and py - r <= y0 and py + r >= y1:
                 break
             r *= 2.0
-        out = cand.orderBy("d2", "x", "y", "z").limit(k)
-        return out.select("x", "y", "z", F.col("d2").alias("d2"))
+        return top.select(*RESULT_COLS, "d2")
 
     def multi_bbox(self, windows, budget: int | None = None) -> DataFrame:
         """Per-window stats for a TABLE of bbox windows in one scan —

@@ -16,7 +16,6 @@ from .range_search import (
     decompose_bbox,
     key_ranges_to_head_ranges,
     planning_grid_bounds,
-    ranges_predicate,
 )
 
 __all__ = [
@@ -31,6 +30,5 @@ __all__ = [
     "merge_key",
     "planning_grid_bounds",
     "quantize",
-    "ranges_predicate",
     "split_key",
 ]

@@ -104,43 +104,17 @@ def key_ranges_to_head_ranges(
     return _merge_ranges(sorted((lo >> tail_len, hi >> tail_len) for lo, hi in ranges))
 
 
-def _balanced_or(preds):
-    """Balanced OR tree — a left-deep reduce() of hundreds of ORs makes
-    Catalyst codegen build quadratically large strings (observed JVM
-    OOM at ~256 terms)."""
-    if len(preds) == 1:
-        return preds[0]
-    mid = len(preds) // 2
-    return _balanced_or(preds[:mid]) | _balanced_or(preds[mid:])
-
-
-def ranges_predicate(col, ranges: Sequence[tuple[int, int]]):
-    """OR-of-BETWEENs Column predicate over ``col`` for the given ranges.
-
-    These are plain comparisons on a long column, so Catalyst pushes
-    them into the Parquet scan (row-group min/max skipping) — the Spark
-    analog of the reference's B-tree range scan (db/__init__.py:118-126
-    + pipeline/retrieve_data.py:110-125). Use only for modest range
-    counts; prefer :func:`apply_key_ranges` which switches to a
-    broadcast range join for long lists (and builds this predicate as
-    ONE parsed SQL string — Column-by-Column composition costs ~25
-    py4j round-trips per range of serial driver time, measured at
-    ~0.3 s of the thin_rect window's total in the r7 adjudication).
-    """
-    from pyspark.sql import functions as F
-
-    if not ranges:
-        return F.lit(False)
-    return _balanced_or([col.between(lo, hi) for lo, hi in ranges])
-
-
 def _ranges_sql(colname: str, ranges: Sequence[tuple[int, int]]) -> str:
-    """The same balanced OR-of-BETWEENs as :func:`ranges_predicate`,
-    rendered as a single SQL string for ``F.expr`` — one py4j call
-    instead of O(ranges) Java object constructions. Parenthesized
-    recursively so the parser rebuilds the balanced tree (a flat OR
-    chain would parse left-deep and regrow the codegen blowup that
-    :func:`_balanced_or` exists to avoid)."""
+    """Balanced OR-of-BETWEENs over ``colname`` as ONE SQL string for
+    ``F.expr``. The comparisons on a long column push into the Parquet
+    scan (row-group min/max skipping) — the Spark analog of the
+    reference's B-tree range scan (db/__init__.py:118-126 +
+    pipeline/retrieve_data.py:110-125). One parsed string is one py4j
+    call; Column-by-Column composition costs ~25 py4j round-trips per
+    range of serial driver time. Parenthesized recursively so the
+    parser builds a balanced tree: a left-deep OR chain of hundreds of
+    terms makes Catalyst codegen build quadratically large strings
+    (observed JVM OOM at ~256 terms)."""
 
     def rec(rs) -> str:
         if len(rs) == 1:

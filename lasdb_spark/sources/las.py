@@ -216,6 +216,14 @@ def parse_las_header(buf: bytes) -> dict:
     }
 
 
+def _scaled_xyz(pts: np.ndarray, hdr: dict) -> np.ndarray:
+    """Grid ints X/Y/Z × scale + offset → (n, 3) float64 x/y/z."""
+    out = np.empty((len(pts), 3), dtype=np.float64)
+    for i, (s, o) in enumerate(zip(hdr["scales"], hdr["offsets"])):
+        out[:, i] = pts["XYZ"[i]] * s + o
+    return out
+
+
 def read_las_bytes(buf: bytes) -> np.ndarray:
     """Full point scan from bytes → (n, 3) float64 of real-world x/y/z
     (reference S2: integer grid × scale + offset). LAZ payloads route
@@ -244,13 +252,7 @@ def read_las_bytes(buf: bytes) -> np.ndarray:
                 raise LazUnsupportedError(
                     f"{exc}; {_LAZ_GUIDANCE}"
                 ) from exc
-            sx, sy, sz = hdr["scales"]
-            ox, oy, oz = hdr["offsets"]
-            out = np.empty((len(pts), 3), dtype=np.float64)
-            out[:, 0] = pts["X"] * sx + ox
-            out[:, 1] = pts["Y"] * sy + oy
-            out[:, 2] = pts["Z"] * sz + oz
-            return out
+            return _scaled_xyz(pts, hdr)
         raise LazUnsupportedError(_LAZ_GUIDANCE)
     n = hdr["point_count"]
     rl = hdr["point_record_length"]
@@ -275,13 +277,7 @@ def read_las_bytes(buf: bytes) -> np.ndarray:
     ).reshape(n, rl)
     # spec allows extra bytes after the format's fields: slice them off
     pts = raw[:, : dt.itemsize].copy().view(dt).reshape(n)
-    sx, sy, sz = hdr["scales"]
-    ox, oy, oz = hdr["offsets"]
-    out = np.empty((n, 3), dtype=np.float64)
-    out[:, 0] = pts["X"] * sx + ox
-    out[:, 1] = pts["Y"] * sy + oy
-    out[:, 2] = pts["Z"] * sz + oz
-    return out
+    return _scaled_xyz(pts, hdr)
 
 
 def read_las_file(path: str) -> np.ndarray:
@@ -295,6 +291,16 @@ def read_las_file(path: str) -> np.ndarray:
 def read_las_header_file(path: str) -> dict:
     with open(path, "rb") as fh:
         return parse_las_header(fh.read(_HEADER14_SIZE))
+
+
+def _grid_records(xyz, point_format: int, scales, offsets):
+    """(xyz as (n, 3) float64, zeroed ``point_format`` records with
+    X/Y/Z = round((v - offset) / scale))."""
+    xyz = np.asarray(xyz, dtype=np.float64).reshape(-1, 3)
+    pts = np.zeros(len(xyz), dtype=point_dtype(point_format))
+    for i, (s, o) in enumerate(zip(scales, offsets)):
+        pts["XYZ"[i]] = np.round((xyz[:, i] - o) / s).astype(np.int64)
+    return xyz, pts
 
 
 def write_las(
@@ -313,14 +319,10 @@ def write_las(
             "requires waveform packets this engine does not produce — "
             f"export as format {_WAVEFORM_BASE[point_format]} instead"
         )
-    dt = point_dtype(point_format)
     v14 = point_format >= 6
     hdr_size = _HEADER14_SIZE if v14 else _HEADER_SIZE
-    xyz = np.asarray(xyz, dtype=np.float64).reshape(-1, 3)
+    xyz, pts = _grid_records(xyz, point_format, scales, offsets)
     n = len(xyz)
-    pts = np.zeros(n, dtype=dt)
-    for i, (s, o) in enumerate(zip(scales, offsets)):
-        pts[("X", "Y", "Z")[i]] = np.round((xyz[:, i] - o) / s).astype(np.int64)
     if n:
         mins = xyz.min(axis=0)
         maxs = xyz.max(axis=0)
@@ -340,7 +342,7 @@ def write_las(
         hdr_size,  # offset to point data
         0,  # VLR count
         point_format,
-        dt.itemsize,
+        pts.dtype.itemsize,
         0 if v14 else n,  # legacy u32 count (0 for pf>=6 per spec)
         *((0, 0, 0, 0, 0) if v14 else (n, 0, 0, 0, 0)),  # legacy by-return
         float(scales[0]), float(scales[1]), float(scales[2]),
@@ -426,12 +428,7 @@ def write_laz(
     6 writes a LAS 1.4 layered tile (the modern AHN4+ exchange shape,
     non-spatial fields zeroed, single-return records). Same grid
     quantization as :func:`write_las`."""
-    xyz = np.asarray(xyz, dtype=np.float64).reshape(-1, 3)
-    pts = np.zeros(len(xyz), dtype=point_dtype(point_format))
-    for i, (s, o) in enumerate(zip(scales, offsets)):
-        pts[("X", "Y", "Z")[i]] = np.round(
-            (xyz[:, i] - o) / s
-        ).astype(np.int64)
+    _, pts = _grid_records(xyz, point_format, scales, offsets)
     if point_format == 0:
         from .laszip_codec import compress_points_to_laz
 

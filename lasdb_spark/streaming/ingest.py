@@ -26,8 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.ingest import DatasetMeta, attach_sfc, record_path
-
-POINT_SCHEMA = "x double, y double, z double"
+from ..sources.las import POINT_SCHEMA
 
 
 def read_point_stream(spark: SparkSession, path: str) -> DataFrame:

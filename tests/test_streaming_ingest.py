@@ -162,3 +162,29 @@ def test_layout_report_detects_append_overlap(spark, sf_dir, tmp_path):
     rep3 = layout_report(spark, base, "layoutqa")
     assert rep3["overlap_files"] == 0
     assert rep3["n_rows"] == 2 * rep["n_rows"]
+
+
+@pytest.mark.spark
+def test_compact_and_layout_report_block_store(spark, sf_dir, tmp_path):
+    """Compaction and layout QA key a block store by ``sfc_head``:
+    compacting keeps every point and every window answer, and leaves
+    head-disjoint files."""
+    from lasdb_spark.operators.ingest import layout_report
+
+    base = str(tmp_path / "store")
+    pts = points_df(spark, sf_dir)
+    ingest_points(pts, "blk", base, layout="block", target_partitions=4)
+    df, meta, layout = load_dataset(spark, base, "blk")
+    n_blocks = df.count()
+    before = sorted(WindowQuerier(df, meta, layout).bbox(BBOX).collect())
+    assert before
+
+    compact_dataset(spark, base, "blk", target_partitions=4)
+    df2, meta2, layout2 = load_dataset(spark, base, "blk")
+    assert layout2 == "block"
+    assert df2.count() == n_blocks
+    assert meta2.point_count == pts.count()
+    assert sorted(WindowQuerier(df2, meta2, layout2).bbox(BBOX).collect()) == before
+    rep = layout_report(spark, base, "blk")
+    assert rep["overlap_files"] == 0
+    assert rep["n_rows"] == n_blocks
