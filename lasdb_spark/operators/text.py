@@ -2210,17 +2210,20 @@ def bpe_train_merges_sql(
     re-segmentation as a per-word left-to-right fold (the sequential
     step plain SQL cannot express; recursion depth = max word length).
     Rounds unroll; a round whose vocabulary has no pairs left
-    naturally emits no row — the same early stop as the Spark side."""
+    naturally emits no row — the same early stop as the Spark side.
+    Each round reads its vocabulary twice (pair count, re-segmentation),
+    so the per-round CTEs are MATERIALIZED: DuckDB inlines CTEs, and
+    inlined the chain recomputes round 0 2^n_merges times."""
     pat = WORD_RE.replace("'", "''")
     ctes = [
-        f"""wt AS (
+        f"""wt AS MATERIALIZED (
   SELECT word, freq FROM (
     SELECT word, count(*) AS freq FROM (
       SELECT unnest(regexp_extract_all(lower(text), '{pat}')) AS word
       FROM documents) GROUP BY 1)
   WHERE freq >= {int(min_freq)}
   ORDER BY freq DESC, word LIMIT {int(max_types)})""",
-        """seqs0 AS (
+        """seqs0 AS MATERIALIZED (
   SELECT word, freq,
          list(substr(word, CAST(s.i AS INT) + 1, 1) ORDER BY s.i) AS ss
   FROM wt, LATERAL (SELECT unnest(range(0, length(word)))) AS s(i)
@@ -2231,7 +2234,7 @@ def bpe_train_merges_sql(
         ctes.append(f"""pairs{t} AS (
   SELECT ss[CAST(s.i AS INT)] AS l, ss[CAST(s.i AS INT) + 1] AS r2, freq
   FROM seqs{t}, LATERAL (SELECT unnest(range(1, len(ss)))) AS s(i))""")
-        ctes.append(f"""best{t} AS (
+        ctes.append(f"""best{t} AS MATERIALIZED (
   SELECT l, r2, SUM(freq) AS cnt FROM pairs{t} GROUP BY 1, 2
   ORDER BY cnt DESC, l, r2 LIMIT 1)""")
         ctes.append(f"""rec{t} AS (
@@ -2245,7 +2248,7 @@ def bpe_train_merges_sql(
          THEN list_append(acc, l || r2) ELSE list_append(acc, ss[pos]) END,
     ss, l, r2
   FROM rec{t} WHERE pos <= len(ss))""")
-        ctes.append(f"""seqs{t + 1} AS (
+        ctes.append(f"""seqs{t + 1} AS MATERIALIZED (
   SELECT word, freq, acc AS ss FROM rec{t}
   WHERE pos > len(ss) AND len(acc) >= 2)""")
     union = "\n  UNION ALL\n".join(
